@@ -9,6 +9,13 @@ reference's BigQuery table/view pipeline (SURVEY §3.3):
 * view task (``tasks/bigquery.py:137-150``) → temp view over the chain
   (Catalyst collapses a chain of views into ONE optimized plan per
   materialized table — the intra-day fusion the reference can't do)
+* fan-out views: a view that two or more tasks list in their ``deps``
+  is persisted when it is built, so its readers plan over one
+  ``InMemoryRelation`` and the day computes it once instead of once per
+  reader (a BigQuery view re-runs for every query that reads it).
+  Every frame persisted for a day is unpersisted when the day ends,
+  also when a task raises: a cache that outlived its day would hold
+  memory and be re-cached by every later write to a path it reads.
 * self-referencing incremental table with init query
   (``sql/mango_feature_cohort_date.sql:6,20``,
   ``sql/init_mango_feature_cohort_date.sql``) → ``ctx.read_dest`` +
@@ -26,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -52,15 +60,26 @@ class TaskContext:
     def read_dest(self) -> DataFrame | None:
         """This task's own existing destination (the incremental
         self-reference pattern), or None before first materialization.
-        An empty destination directory (an init bootstrap that found no
-        history writes zero partitions) counts as absent."""
+        A missing directory, or one holding no data files (an init
+        bootstrap that found no history writes zero partitions), is
+        absent.  Any other read failure raises: an unreadable table is
+        never taken for a first run, which would re-bootstrap it."""
         path = self.pipeline._table_path(self.task.name)
-        if not os.path.exists(path):
+        if not _has_data_files(path):
             return None
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None
+        return self.spark.read.parquet(path)
+
+
+def _has_data_files(path: str) -> bool:
+    """Whether ``path`` holds a file Spark would read: one whose name
+    does not start with ``_`` or ``.`` (``_SUCCESS``, ``.crc`` files and
+    ``_temporary`` are not data), in the directory or a partition
+    directory below it."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
 
 
 class CleanupPolicy:
@@ -205,6 +224,11 @@ class Pipeline:
         self.order = list(ts.static_order())
         self.warehouse = warehouse
         self._views: dict[str, DataFrame] = {}
+        # views two or more tasks read: run_day persists them for the day
+        readers = Counter(d for t in tasks for d in t.deps)
+        self._fan_out = {
+            t.name for t in tasks if t.kind == "view" and readers[t.name] >= 2
+        }
 
     def _table_path(self, name: str) -> str:
         return os.path.join(self.warehouse, name)
@@ -218,12 +242,28 @@ class Pipeline:
     def run_day(self, spark: SparkSession, date: str) -> None:
         """Run the whole DAG for one execution date, idempotently: table
         writes are dynamic-partition overwrites of that date (and its
-        backfill window), views are re-registered plans."""
+        backfill window), views are re-registered plans.  Fan-out views
+        are persisted for the day and released when it ends, also when a
+        task raises."""
+        persisted: list[DataFrame] = []
+        try:
+            self._run_tasks(spark, date, persisted)
+        finally:
+            for df in persisted:
+                df.unpersist(blocking=True)
+
+    def _run_tasks(
+        self, spark: SparkSession, date: str, persisted: list[DataFrame]
+    ) -> None:
         for name in self.order:
             t = self.tasks[name]
             ctx = TaskContext(spark=spark, pipeline=self, date=date, task=t)
             if t.kind == "view":
-                self._views[name] = t.fn(ctx)
+                df = t.fn(ctx)
+                if name in self._fan_out:
+                    df = df.persist()
+                    persisted.append(df)
+                self._views[name] = df
                 continue
             if t.init_fn is not None and ctx.read_dest() is None:
                 init_df = t.init_fn(ctx)

@@ -515,9 +515,10 @@ def unnest_events_full(pings: DataFrame) -> DataFrame:
 
 #: The pre-cascade surface: every column the D4 cascade + fan-out +
 #: downstream RFE/cohort consumers read.  This is also the schema of
-#: the materialized flat-events fixture (queries/mango_materialized.py)
-#: — the production DAG materializes mango_events_unnested the same way
-#: (plans/mango_dag.py, mirroring reference tasks/bigquery.py:416-461).
+#: the materialized flat-events fixture (queries/mango_materialized.py).
+#: In the production DAG (plans/mango_dag.py, mirroring reference
+#: tasks/bigquery.py:416-461) mango_events_unnested is a view with one
+#: reader: it is neither materialized nor persisted.
 FLAT_SURFACE_COLS = [
     "client_id", "submission_timestamp", "submission_date", "os",
     "country", "settings_search_engine", "event_timestamp",

@@ -4,6 +4,8 @@ cohort table with init bootstrap."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,3 +165,48 @@ def test_incremental_join_view_equals_full_recompute(spark):
         r.o_custkey: (r.n_orders, r.revenue_cents) for r in merged.collect()
     }
     assert a == b
+
+
+def test_unreadable_destination_raises_instead_of_rebootstrapping(
+    spark, tmp_path
+):
+    """A destination with no data files is absent and bootstraps; one
+    whose data files cannot be read makes the day raise, and the init
+    query does not run again over it."""
+    from taipei_bi_etl_spark.plans.dag import Pipeline, TaskSpec
+
+    def rows(*pairs):
+        return spark.createDataFrame(
+            list(pairs), "v long, day string"
+        ).withColumn("day", F.col("day").cast("date"))
+
+    inits = []
+
+    def init(ctx):
+        inits.append(ctx.date)
+        return rows((0, "2024-01-01"))
+
+    def daily(ctx):
+        assert ctx.read_dest() is not None
+        return rows((1, ctx.date))
+
+    dest = tmp_path / "t"
+    dest.mkdir()
+    (dest / "_SUCCESS").touch()  # what an empty bootstrap leaves
+    pipe = Pipeline([TaskSpec("t", daily, init_fn=init)], str(tmp_path))
+    pipe.run_day(spark, "2024-01-02")
+    assert inits == ["2024-01-02"]
+
+    n_corrupted = 0
+    for root, _dirs, files in os.walk(dest):
+        for f in files:
+            if f.endswith(".crc"):
+                os.remove(os.path.join(root, f))
+            elif f.endswith(".parquet"):
+                with open(os.path.join(root, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+                n_corrupted += 1
+    assert n_corrupted > 0
+    with pytest.raises(Exception, match="(?i)parquet"):
+        pipe.run_day(spark, "2024-01-03")
+    assert inits == ["2024-01-02"]

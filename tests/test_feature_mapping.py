@@ -340,17 +340,29 @@ def test_rule_checklist_is_exhaustive_both_directions():
     """VERDICT r01 #6: every feature.push site in the reference JS
     (131 sites) maps to a rule item emitting the same template, and no
     repo rule item lacks a JS site — mechanical completeness, not
-    author-shared transcription."""
+    author-shared transcription.  Without the reference tree the sites
+    come from their committed extraction; with it, that extraction must
+    also equal a fresh parse of the reference."""
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from feature_rule_checklist import build_checklist
+    from feature_rule_checklist import (
+        JS_PATH,
+        build_checklist,
+        committed_push_sites,
+        reference_push_sites,
+    )
 
     rows, unmatched_js, unmatched_rules = build_checklist()
     assert len(rows) == 131
     assert unmatched_js == []
     assert unmatched_rules == []
+    if Path(JS_PATH).exists():
+        assert committed_push_sites() == reference_push_sites(), (
+            "tools/feature_push_sites.json has drifted from the reference; "
+            "rerun tools/feature_rule_checklist.py --extract"
+        )
 
 
 def test_mapped_compile_equals_column_compile(spark):

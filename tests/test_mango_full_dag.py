@@ -1,8 +1,9 @@
 """End-to-end gates for the full 18-task mango pipeline
 (plans/mango_dag.py::build_full_mango_pipeline): every reference task
 materializes, re-running a day is idempotent, the two custom cleanup
-policies enforce their invariants, and spot metrics agree with direct
-recomputation outside the DAG machinery."""
+policies enforce their invariants, spot metrics agree with direct
+recomputation outside the DAG machinery, and persisting the fan-out
+views changes no table and leaves nothing in Spark's cache."""
 
 from __future__ import annotations
 
@@ -32,11 +33,51 @@ TABLES = [
 ]
 
 
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _cache_is_empty(spark, rdds_before: set[int]) -> bool:
+    """No plan registered in the cache manager, and no RDD persisted
+    since ``rdds_before`` was taken (earlier test modules may leave
+    local checkpoints, which ``clearCache`` does not release)."""
+    return (
+        spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        and _persisted_rdds(spark) <= rdds_before
+    )
+
+
 @pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
+def dag_run(spark, tmp_path_factory):
+    """The DAG over DATES from an empty warehouse (the first day runs
+    the init bootstraps), and whether Spark's cache was empty after each
+    day."""
+    spark.catalog.clearCache()
+    rdds_before = _persisted_rdds(spark)
     wh = str(tmp_path_factory.mktemp("mango_full_wh"))
     p = build_full_mango_pipeline(SF_DIR, wh)
-    p.run_range(spark, DATES)
+    empty_after = []
+    for d in DATES:
+        p.run_day(spark, d)
+        empty_after.append(_cache_is_empty(spark, rdds_before))
+    return wh, empty_after
+
+
+@pytest.fixture(scope="module")
+def warehouse(dag_run):
+    return dag_run[0]
+
+
+@pytest.fixture(scope="module")
+def unpersisted_warehouse(spark, tmp_path_factory):
+    """The same days with ``DataFrame.persist`` a no-op, so every reader
+    of a fan-out view recomputes it."""
+    from pyspark.sql.classic.dataframe import DataFrame as ConcreteDF
+
+    wh = str(tmp_path_factory.mktemp("mango_full_wh_unpersisted"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ConcreteDF, "persist", lambda self, *a, **k: self)
+        build_full_mango_pipeline(SF_DIR, wh).run_range(spark, DATES)
     return wh
 
 
@@ -48,6 +89,61 @@ def test_all_reference_tables_materialize(spark, warehouse):
     for t in TABLES:
         n = _read(spark, warehouse, t).count()
         assert n > 0, f"{t} is empty"
+
+
+def test_fan_out_views_are_the_shared_views(tmp_path):
+    """The views two or more tasks read, and only those, are persisted."""
+    p = build_full_mango_pipeline(SF_DIR, str(tmp_path))
+    assert p._fan_out == {
+        "mango_events_feature_mapping",
+        "mango_cohort_user_occurrence",
+    }
+
+
+def test_persisting_fan_out_views_changes_no_table(
+    spark, warehouse, unpersisted_warehouse
+):
+    """Every table, over all DATES including the bootstrap day, is the
+    same multiset of rows whether the fan-out views are cached or each
+    reader recomputes them."""
+    from taipei_bi_etl_spark.checks import compare_tables_checksum
+
+    for t in TABLES:
+        a = _read(spark, warehouse, t)
+        b = _read(spark, unpersisted_warehouse, t)
+        assert sorted(a.columns) == sorted(b.columns), t
+        r = compare_tables_checksum(spark, a, b, sorted(a.columns))
+        assert r["match"], f"{t} differs with fan-out views persisted: {r}"
+
+
+def test_cache_is_empty_after_every_day(dag_run):
+    _wh, empty_after = dag_run
+    assert empty_after == [True] * len(DATES)
+
+
+def test_cache_is_released_when_a_task_raises(spark, warehouse, tmp_path):
+    """A table task that raises mid-day still leaves Spark's cache
+    empty; at the moment it raised, both fan-out views were cached."""
+    wh = str(tmp_path / "wh")
+    shutil.copytree(warehouse, wh)
+    p = build_full_mango_pipeline(SF_DIR, wh)
+    spark.catalog.clearCache()
+    rdds_before = _persisted_rdds(spark)
+    seen = {}
+
+    def failing(ctx):
+        seen["cached"] = (
+            ctx.src("mango_cohort_user_occurrence").is_cached
+            and ctx.src("mango_events_feature_mapping").is_cached
+        )
+        seen["cache_empty"] = _cache_is_empty(spark, rdds_before)
+        raise RuntimeError("task failed")
+
+    p.tasks["mango_active_user_count"].fn = failing
+    with pytest.raises(RuntimeError, match="task failed"):
+        p.run_day(spark, DATES[-1])
+    assert seen == {"cached": True, "cache_empty": False}
+    assert _cache_is_empty(spark, rdds_before)
 
 
 def test_rerun_last_day_is_idempotent(spark, warehouse):

@@ -6,11 +6,16 @@ same feature template in `taipei_bi_etl_spark/feature_mapping.py`
 both transcriptions share an author — this artifact makes completeness
 checkable line by line).
 
-Usage: python tools/feature_rule_checklist.py [--write]
+The push sites are parsed from the reference when it is present, and
+read from their committed extraction ``tools/feature_push_sites.json``
+when it is not; ``--extract`` rewrites that file from the reference.
+
+Usage: python tools/feature_rule_checklist.py [--write] [--extract]
 """
 
 from __future__ import annotations
 
+import json
 import re
 import sys
 from collections import defaultdict
@@ -19,6 +24,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 JS_PATH = "/root/reference/udf_js/feature_mapping.sql"
+SITES_PATH = Path(__file__).resolve().with_name("feature_push_sites.json")
 
 # JS function name → repo vertical name
 _JS_VERTICALS = (
@@ -48,7 +54,26 @@ def _js_template(expr: str) -> str:
 
 
 def js_push_sites() -> list[tuple[int, str, str]]:
-    """(line_no, vertical, template) for every feature.push in the JS."""
+    """(line_no, vertical, template) for every feature.push in the JS:
+    from the reference when present, else from the committed extraction."""
+    if Path(JS_PATH).exists():
+        return reference_push_sites()
+    return committed_push_sites()
+
+
+def committed_push_sites() -> list[tuple[int, str, str]]:
+    """The push sites as last extracted from the reference."""
+    return [tuple(site) for site in json.loads(SITES_PATH.read_text())]
+
+
+def write_push_sites(sites: list[tuple[int, str, str]]) -> None:
+    """Commit ``sites`` as the extraction, one site per line."""
+    body = ",\n".join(json.dumps(list(site)) for site in sites)
+    SITES_PATH.write_text("[\n" + body + "\n]\n")
+
+
+def reference_push_sites() -> list[tuple[int, str, str]]:
+    """Parse every feature.push site out of the reference JS."""
     text = Path(JS_PATH).read_text()
     lines = text.split("\n")
     bounds = []
@@ -113,7 +138,8 @@ def render() -> str:
         "`feature.push` site in the reference's",
         "`udf_js/feature_mapping.sql` maps to the rule item emitting the",
         "same template; `tests/test_feature_mapping.py` asserts both",
-        "directions are exhaustive.",
+        "directions are exhaustive.  Without the reference, the sites",
+        "come from their committed extraction `tools/feature_push_sites.json`.",
         "",
         f"JS push sites: {len(rows) + len(unmatched_js)} · "
         f"matched: {len(rows)} · unmatched JS: {len(unmatched_js)} · "
@@ -137,6 +163,9 @@ def render() -> str:
 
 
 if __name__ == "__main__":
+    if "--extract" in sys.argv:
+        write_push_sites(reference_push_sites())
+        print(f"wrote {SITES_PATH.name}")
     text = render()
     if "--write" in sys.argv:
         Path(__file__).resolve().parent.parent.joinpath(
